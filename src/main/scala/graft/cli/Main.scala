@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.config.OperationConfig
 import graft.core.Catalog
 import graft.operators._
-import graft.sources.FileTableStore
+import graft.sources.{DriverSchema, FileTableStore}
 
 /** CLI mirroring the reference's entry points (amaxa/__main__.py:18-47):
   *
@@ -161,11 +161,10 @@ object Main {
           .filterNot(sc => new java.io.File(s"$dataDir/${sc.fileName}").exists())
           .map(sc => s"Cannot open input file $dataDir/${sc.fileName} for sObject ${sc.sobject}")
         if (missingFiles.nonEmpty) { missingFiles.foreach(System.err.println); return 1 }
+        // Wire-model reads whose header is read on the driver: no job
+        // per input just to learn its columns.
         val inputs: Map[String, DataFrame] = cfg.steps.map { sc =>
-          sc.sobject -> spark.read.option("header", true)
-            .option("inferSchema", false)
-            .option("multiLine", true).option("escape", "\"")
-            .csv(s"$dataDir/${sc.fileName}")
+          sc.sobject -> DriverSchema.read(spark, s"$dataDir/${sc.fileName}", "csv")
         }.toMap
         // Input column validation (reference load_operation.py:151-208).
         val colErrs = cfg.steps.zip(steps).flatMap { case (sc, st) =>

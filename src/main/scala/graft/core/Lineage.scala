@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{count, lit, when}
+import org.apache.spark.sql.functions.{col, count, lit, when}
 
 /** The engine's single lineage-cut seam.
   *
@@ -44,56 +44,63 @@ object Lineage {
     else df.localCheckpoint(eager = false)
   }
 
-  /** [[cut]] + row count in ONE Spark job where the backend allows it.
-    * Iterative engines always need both (materialize the pass result,
-    * then branch on emptiness); run separately that is two scheduler
-    * round-trips per pass. A non-eager localCheckpoint materializes its
-    * blocks as a side effect of the first action, so count() doubles as
-    * the materializing job. Reliable checkpoints re-execute lineage on
-    * materialization, so there the eager two-job form stays (correctness
-    * over a saved job on the path that only runs on real clusters).
-    */
-  def cutCounted(df: DataFrame): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    if (spark.conf.getOption("spark.graft.checkpoint.reliable").contains("true")) {
-      val c = cut(df)
-      (c, c.count())
-    } else {
-      val c = df.localCheckpoint(eager = false)
-      (c, c.count())
+  /** Column-wise sums of a frame of non-null long columns, in ONE narrow
+    * pass over its physical rows (no SQL aggregate: under AQE a global
+    * aggregate is a shuffle-map job plus a result job). */
+  private def sums(df: DataFrame): Array[Long] = {
+    val width = df.columns.length
+    df.queryExecution.toRdd.mapPartitions { rows =>
+      val acc = new Array[Long](width)
+      rows.foreach(r => (0 until width).foreach(i => acc(i) += r.getLong(i)))
+      Iterator.single(acc)
+    }.collect().foldLeft(new Array[Long](width)) { (a, b) =>
+      (0 until width).foreach(i => a(i) += b(i)); a
     }
   }
 
-  /** [[cut]] + total row count + predicate-match count in ONE Spark job
-    * (same mechanism as [[cutCounted]]). The load engine's stage bodies
-    * all follow materialize → "any errors?" → "any rows at all?", which
-    * as separate actions is three scheduler round-trips per table.
+  /** [[cut]] + row count. Iterative engines always need both
+    * (materialize the pass result, then branch on emptiness). The count
+    * is a plain RDD count over the cut frame's physical rows, and that
+    * one job also materializes the checkpoint blocks: the budget is the
+    * inner plan's exchanges (their map stages run when the cut plans
+    * its input) plus ONE job. `Dataset.count()` would be a global
+    * aggregate — two jobs under AQE.
     */
-  def cutStats(df: DataFrame, pred: Column): (DataFrame, Long, Long) = {
-    val spark = df.sparkSession
-    val c =
-      if (spark.conf.getOption("spark.graft.checkpoint.reliable").contains("true")) cut(df)
-      else df.localCheckpoint(eager = false)
-    val row = c.select(count(lit(1)), count(when(pred, lit(1)))).head()
-    (c, row.getLong(0), row.getLong(1))
+  def cutCounted(df: DataFrame): (DataFrame, Long) = {
+    val c = cutLazy(df)
+    (c, c.queryExecution.toRdd.count())
   }
 
-  /** [[cutStats]] + key-cardinality stats in the SAME single job: returns
-    * (frame, total rows, predicate matches, non-null keys, distinct keys).
-    * Lets the load engine detect duplicate input ids for free — the
-    * distinct aggregate shuffles only key values over the materializing
-    * scan, where the eager groupBy+join it replaces cost two extra
-    * full-lineage jobs per staged table.
+  /** [[cut]] + total row count + predicate-match count (a null predicate
+    * does not match), same budget as [[cutCounted]]: the inner plan's
+    * exchanges plus ONE job. The load engine's stage bodies all follow
+    * materialize → "any errors?" → "any rows at all?", which as separate
+    * actions is three scheduler round-trips per table.
+    */
+  def cutStats(df: DataFrame, pred: Column): (DataFrame, Long, Long) = {
+    val c = cutLazy(df)
+    val Array(n, m) = sums(c.select(lit(1L), when(pred, 1L).otherwise(0L)))
+    (c, n, m)
+  }
+
+  /** [[cutStats]] + key-cardinality stats: returns (frame, total rows,
+    * predicate matches, non-null keys, distinct non-null keys). Lets the
+    * load engine detect duplicate input ids without an extra pass: one
+    * groupBy(key) shuffles only keys and two counters per key, its map
+    * stage materializes the cut, and the narrow pass sums the groups —
+    * the inner plan's exchanges plus TWO jobs, where the eager
+    * groupBy+join this replaced cost two extra full-lineage jobs per
+    * staged table.
     */
   def cutStatsKeyed(df: DataFrame, pred: Column, key: Column)
       : (DataFrame, Long, Long, Long, Long) = {
-    val spark = df.sparkSession
-    val c =
-      if (spark.conf.getOption("spark.graft.checkpoint.reliable").contains("true")) cut(df)
-      else df.localCheckpoint(eager = false)
-    val row = c.select(count(lit(1)), count(when(pred, lit(1))),
-      count(key), org.apache.spark.sql.functions.count_distinct(key)).head()
-    (c, row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3))
+    val c = cutLazy(df)
+    val groups = c.groupBy(key.as("__k"))
+      .agg(count(lit(1)).as("__n"), count(when(pred, lit(1))).as("__m"))
+    val keyed = col("__k").isNotNull
+    val Array(n, m, keys, distinct) = sums(groups.select(col("__n"), col("__m"),
+      when(keyed, col("__n")).otherwise(0L), when(keyed, 1L).otherwise(0L)))
+    (c, n, m, keys, distinct)
   }
 
   /** Release the storage behind a frame returned by [[cut]] once it is

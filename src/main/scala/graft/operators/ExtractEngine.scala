@@ -290,9 +290,10 @@ final class ExtractOperation(
     // fixpoint, whose resolves are almost always EMPTY after the seed
     // settles (each pass's self-deps are the parents that FOUND the new
     // children — already extracted), and every wall delta was inside
-    // noise. The count-then-early-exit shape is the better trade: one
-    // cheap metadata job versus a broadcast-build + empty-propagated
-    // count pipeline per drained iteration. Driver REPLAN per pass is
+    // noise. The count-then-early-exit shape is the better trade: the
+    // pre-count is the required-id plan's own exchanges plus one narrow
+    // count job (Lineage.cutCounted's budget) versus a broadcast-build +
+    // empty-propagated count pipeline per drained iteration. Driver REPLAN per pass is
     // measured NOT the cost (graft.tools.EnginePhases: analysis +
     // optimization + planning ≈ 0.4 s of a 5.6 s warm fixpoint wall).
     val (pre, preCount) = graft.core.Lineage.cutCounted(getRequiredIds(t))

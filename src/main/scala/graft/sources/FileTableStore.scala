@@ -26,10 +26,9 @@ final class FileTableStore(
     if (touched(table)) return mem.scan(table)
     // Resolution (parquet shadows csv) and the CSV wire model are shared
     // with the format("graft") DSv2 face — ONE definition of the layout.
+    // The schema is read on the driver: opening a table launches no job.
     GraftDataSource.resolve(dir, table) match {
-      case Some((path, "parquet")) => spark.read.parquet(path)
-      case Some((path, _)) =>
-        spark.read.options(GraftDataSource.CsvWireOptions).csv(path)
+      case Some((path, format)) => DriverSchema.read(spark, path, format)
       case None => spark.emptyDataFrame
     }
   }

@@ -118,8 +118,8 @@ object GraftDataSource {
 
   /** The reference's CSV wire model (SURVEY §1.2): header row, strings
     * all the way down, RFC 4180 quoting/embedded newlines. The single
-    * definition both [[FileTableStore.scan]] and the DSv2 face read
-    * through.
+    * definition [[FileTableStore.scan]], the CLI's load inputs and the
+    * DSv2 face read through.
     */
   val CsvWireOptions: Map[String, String] = Map(
     "header" -> "true",

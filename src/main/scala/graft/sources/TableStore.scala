@@ -60,11 +60,15 @@ final class InMemoryTableStore(
     val withNew = rows.withColumn("__new_id", newIdExpr(table, col(originalIdCol)))
     val stored = withNew.drop(originalIdCol)
       .withColumnRenamed("__new_id", schema(table).idField)
+    // No cut here: the load engine hands over materialized rows and the
+    // id is a pure projection of them, so the table stays a cheap plan
+    // over cut frames — its stats pass over the returned result already
+    // runs the one job this insert needs.
     synchronized {
       data += (table -> (data.get(table) match {
         case Some(existing) => existing.unionByName(stored, allowMissingColumns = true)
         case None => stored
-      }).cutLineage)
+      }))
     }
     withNew.select(
       col(originalIdCol).as("originalId"),
@@ -77,12 +81,14 @@ final class InMemoryTableStore(
     val updates = rows.withColumnRenamed(idCol, idf)
     val updCols = updates.columns.filterNot(_ == idf)
     // Updates against ids that do not exist must surface as row errors,
-    // not silent no-ops (the left-join merge below ignores them).
+    // not silent no-ops (the left-join merge below ignores them). Lazy:
+    // it is read once, by the returned result, against the pre-merge
+    // table this captures.
     val existing0 = synchronized(data.get(table))
     val missing = (existing0 match {
       case Some(e) => updates.join(e.select(col(idf)), Seq(idf), "left_anti")
       case None => updates
-    }).select(col(idf).cast("string").as("__miss_id")).cutLineage
+    }).select(col(idf).cast("string").as("__miss_id"))
     if (existing0.isEmpty)
       return rows.select(col(idCol).cast("string").as("id"),
         lit(s"Id not found in $table").as("error"))

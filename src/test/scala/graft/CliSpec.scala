@@ -97,6 +97,37 @@ class CliSpec extends AnyFunSuite {
     assert(mid.getAs[String]("ParentId") == rootId)
   }
 
+  /** Spark jobs (broadcast builds aside, see [[JobCounter]]) for extract →
+    * load → re-extract on the fixture above, measured when every job that
+    * moves no data was removed (a schema inference read per input, a
+    * SQL-aggregate count per Lineage call, the store's eager cuts; 104
+    * before). A returning inference read or a second count per
+    * materialization pushes the round trip over it. */
+  val RoundTripJobBudget = 76
+
+  test("CLI round trip stays within its Spark job budget") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cli_jobs").toString
+    Seq("describes", "src").foreach(s => new java.io.File(s"$root/$s").mkdirs())
+    writeDescribes(s"$root/describes")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/op.yml"), opYaml)
+    Fixture.accounts.write.mode("overwrite").option("header", true)
+      .csv(s"$root/src/Account.csv")
+    Fixture.contacts.write.mode("overwrite").option("header", true)
+      .csv(s"$root/src/Contact.csv")
+    def run(load: Boolean, from: String, to: String): Int = cli.Main.run(
+      Array(s"$root/op.yml") ++ (if (load) Seq("--load") else Nil) ++ Seq(
+        "--describe-dir", s"$root/describes",
+        "--data-dir", s"$root/$from", "--out-dir", s"$root/$to"))
+    val (rcs, jobs) = JobCounter(spark) {
+      Seq(run(load = false, "src", "extracted"), run(load = true, "extracted", "target"),
+        run(load = false, "target", "final"))
+    }
+    assert(rcs == Seq(0, 0, 0))
+    assert(spark.read.option("header", true).csv(s"$root/final/Account.csv").count() == 5)
+    assert(jobs <= RoundTripJobBudget,
+      s"round trip ran $jobs Spark jobs, budget $RoundTripJobBudget")
+  }
+
   test("v2 config: plugin transform + exclude-fields apply through the CLI") {
     val root = java.nio.file.Files.createTempDirectory("graft_cli_v2").toString
     Seq("describes", "src", "extracted").foreach(s => new java.io.File(s"$root/$s").mkdirs())
