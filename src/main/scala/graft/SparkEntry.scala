@@ -38,18 +38,4 @@ object SparkEntry {
       graft.queries.MultimodalOps.oracle ++
       graft.queries.BpeOps.oracle ++
       graft.queries.GraphOps.oracle
-
-  /** Queries whose semantics are not expressible in DuckDB SQL — they
-    * would get the driver's weaker rows-only check. EMPTY since round 3:
-    * MinHash/SimHash moved from xxhash64 (not practically expressible as
-    * a SQL scalar) to an md5-derived hash family the oracle reproduces
-    * with HUGEINT mod-2^64 folds, and the IVF/k-means centroid mean
-    * became integer-exact (order-free sums, fixed division order) — so
-    * every registered query is value-checked.
-    */
-  lazy val rowsOnlyQueries: Set[String] =
-    graft.queries.TextOps.rowsOnly ++
-      graft.queries.PipelineOps.rowsOnly ++
-      graft.queries.DedupOps.rowsOnly ++
-      graft.queries.SimilarityOps.rowsOnly
 }

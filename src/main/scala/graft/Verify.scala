@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,12 +13,7 @@ object Verify {
     // (the driver always invokes the 2-arg full sweep).
     val only: Option[Set[String]] =
       if (args.length == 3) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder(LocalSession.cpus(32))
       // Marks the session as oracle-gated: queries whose oracle text
       // interpolates a compile-time default (pipe_dp_card's DP seed)
       // refuse to run with a conflicting runtime conf instead of

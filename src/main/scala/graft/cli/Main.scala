@@ -98,11 +98,7 @@ object Main {
         // Only stop the session if we created it (run() is also called
         // in-process from an existing session).
         val preexisting = SparkSession.getDefaultSession.isDefined
-        val spark = SparkSession.builder()
-          .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-          .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
+        val spark = graft.LocalSession.builder(graft.LocalSession.cpus(8))
           // graft's optimizer rules (no-op on a preexisting session —
           // extensions apply at session construction only).
           .withExtensions(new graft.plans.GraftExtensions())

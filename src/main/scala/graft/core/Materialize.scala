@@ -113,6 +113,14 @@ object Materialize {
     spark.table(bucketedTableName(spark, key))
   }
 
+  /** Keys of this session's artifacts that have been computed (read-only;
+    * the cost ledger diffs it around a query). */
+  private[graft] def computedKeys(spark: SparkSession): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    Seq(cache, bucketedCache).flatMap(c => Option(c.get(spark)).toSeq)
+      .flatMap(_.asScala.collect { case (k, slot) if slot.computed => k }).toSet
+  }
+
   /** Drop every materialized artifact of one session: forget the keys AND
     * delete the temp parquet directories now (deleteOnExit only fires at
     * JVM exit — a long-lived session cycling through many corpora would

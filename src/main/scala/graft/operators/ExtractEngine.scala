@@ -56,8 +56,7 @@ final class ExtractOperation(
   // accumulator snapshots through addDependency's anti-joins).
   private val idFolds = mutable.Map.empty[String, Int]
   private val idCompactCut = mutable.Map.empty[String, DataFrame]
-  private val idCompactEvery: Int =
-    spark.conf.getOption("spark.graft.extract.idCompactEvery").map(_.toInt).getOrElse(64)
+  private val idCompactEvery = 64
   // Tables whose required-id set changed since their last resolve pass:
   // a resolve against an unchanged (already-drained) set is a guaranteed
   // no-op, and skipping it saves its whole eager job chain — the
@@ -111,7 +110,8 @@ final class ExtractOperation(
     * fixpoint loop re-derives this identical subplan in every lookup and
     * resolve pass, and each fresh Dataset pays its own Catalyst analysis —
     * measured ~0.3–0.6 s of pure driver time over a ~12-iteration fixpoint
-    * (graft.tools.EnginePhases). Datasets are immutable, so reuse is free.
+    * (OPTIMIZATION_r13.md, x_engine gates; graft.tools.Ledger's `plan.*`
+    * fields re-measure it). Datasets are immutable, so reuse is free.
     */
   private val scopedScans = mutable.Map.empty[String, DataFrame]
   private def scanScopedCached(step: ExtractStep): DataFrame =
@@ -294,8 +294,9 @@ final class ExtractOperation(
     // pre-count is the required-id plan's own exchanges plus one narrow
     // count job (Lineage.cutCounted's budget) versus a broadcast-build +
     // empty-propagated count pipeline per drained iteration. Driver REPLAN per pass is
-    // measured NOT the cost (graft.tools.EnginePhases: analysis +
-    // optimization + planning ≈ 0.4 s of a 5.6 s warm fixpoint wall).
+    // measured NOT the cost (OPTIMIZATION_r13.md: analysis + optimization
+    // + planning ≈ 0.4 s of a 5.6 s warm fixpoint wall; graft.tools.Ledger's
+    // `plan.*` fields re-measure it).
     val (pre, preCount) = graft.core.Lineage.cutCounted(getRequiredIds(t))
     requiredIds(t) = pre
     if (preCount == 0) return false

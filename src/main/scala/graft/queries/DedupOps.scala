@@ -1636,6 +1636,4 @@ object DedupOps {
       |  coalesce(c.corpus_dup,
       |    CASE WHEN nw.intra_min < nw.doc_id THEN nw.intra_min END) IS NOT NULL AS is_dup
       |FROM nw LEFT JOIN corpus c USING (h)""".stripMargin
-
-  val rowsOnly: Set[String] = Set.empty
 }

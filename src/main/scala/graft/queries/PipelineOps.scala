@@ -2151,6 +2151,4 @@ object PipelineOps {
          |  gn.pad_naive_tokens
          |FROM gl JOIN gn USING (lang, shard, batch_idx)""".stripMargin,
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

@@ -1492,8 +1492,4 @@ object SimilarityOps {
          |FROM ($selAll)""".stripMargin
     },
   )
-
-  /** Empty since the centroid mean became integer-exact (order-free sums,
-    * fixed division order) — every similarity query is oracle-checked. */
-  val rowsOnly: Set[String] = Set.empty
 }

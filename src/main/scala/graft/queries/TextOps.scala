@@ -988,6 +988,4 @@ object TextOps {
          |JOIN ds b ON b.doc_id = pairs.doc_b
          |GROUP BY 1, 2""".stripMargin,
   )
-
-  val rowsOnly: Set[String] = Set.empty
 }

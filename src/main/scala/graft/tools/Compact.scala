@@ -57,11 +57,7 @@ object Compact {
       sys.exit(2)
     }
     val target = if (args.length > 2) args(2).toLong else 128L * 1024 * 1024
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder(graft.LocalSession.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val k = compact(spark, args(0), args(1), target)
     println(s"[compact] ${args(0)} -> ${args(1)}: $k file(s)")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev tool: demonstrate SCALE.md's IVF partition-pruning claim with the
@@ -18,12 +17,7 @@ import org.apache.spark.sql.functions._
 object IvfPruneDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_demo").toString

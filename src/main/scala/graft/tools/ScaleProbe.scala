@@ -6,31 +6,14 @@
 //   sbt "runMain graft.tools.ScaleProbe"
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.atomic.AtomicLong
 
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = "/root/testdata/sf0.1"
     val sf1 = "/tmp/graft_sf1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = graft.LocalSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val shuffleRead = new AtomicLong(0)
-    val shuffleWrite = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        Option(t.taskMetrics).foreach { m =>
-          shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-        }
-      }
-    })
 
     // Graph-family sf1 arm (round-13, closes VERDICT r12 #1 / r11 #8):
     // 10 KEY-DISJOINT copies of the sf0.1 relational tables — order,
@@ -89,13 +72,9 @@ object ScaleProbe {
       queries.foreach { name =>
         graft.core.Lineage.releaseAllStorage(spark)
         graft.core.Materialize.clear(spark)
-        shuffleRead.set(0); shuffleWrite.set(0)
-        val t0 = System.nanoTime()
-        val n = graft.SparkEntry.queries(name)(spark, dir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
-        println(f"[scale] $tag $name%-24s ${sec}%7.2f s  rows=$n%-8d " +
-          f"shuffleR=${shuffleRead.get / 1e6}%9.1f MB shuffleW=${shuffleWrite.get / 1e6}%9.1f MB")
+        val (n, c) = Ledger.measure(spark)(graft.SparkEntry.queries(name)(spark, dir).count())
+        println(f"[scale] $tag $name%-24s ${c.wallNs / 1e9}%7.2f s  rows=$n%-8d " +
+          f"shuffleR=${c.shuffleRead / 1e6}%9.1f MB shuffleW=${c.shuffleWrite / 1e6}%9.1f MB")
       }
     }
     spark.stop()

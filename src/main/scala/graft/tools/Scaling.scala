@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev main: empirical scaling curve across the three testdata SFs — the
   * local evidence for the 100 TB posture. For each representative query
   * it reports per-SF wall time and the sf0.1/sf0.01 ratio against the
@@ -34,13 +32,7 @@ object Scaling {
     val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
       "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args.toSeq else Representative
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder(graft.LocalSession.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try spark.range(1000000).selectExpr("sum(id)").collect()
     catch { case _: Throwable => () }

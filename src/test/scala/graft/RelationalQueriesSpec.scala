@@ -11,10 +11,7 @@ class RelationalQueriesSpec extends AnyFunSuite {
 
   test("every query has an oracle or is explicitly rows-only") {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    // rows-only queries are allowed but should be a deliberate short list
-    assert(missing.forall(n => SparkEntry.rowsOnlyQueries.contains(n)),
-      s"queries without oracle nor rows-only registration: " +
-        s"${missing -- SparkEntry.rowsOnlyQueries}")
+    assert(missing.isEmpty, s"queries without an oracle: $missing")
   }
 
   test("oracle keys all have query implementations") {
