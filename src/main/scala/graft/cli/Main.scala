@@ -113,6 +113,10 @@ object Main {
           // not a stack trace (reference validates options at config time).
           case e: graft.core.TransformException =>
             System.err.println(e.getMessage); 1
+          // An unreadable --use-state is an unreadable input, like the
+          // op file: one line, exit 2.
+          case e: StateDir.Unreadable =>
+            System.err.println(e.getMessage); 2
         } finally if (!preexisting) spark.stop()
     }
   }
@@ -127,10 +131,10 @@ object Main {
         val store = new FileTableStore(spark, dataDir, catalog.byName)
         val op = new ExtractOperation(store, catalog, steps)
         // Same resume surface as loads: --use-state <dir> restores the
-        // last step-boundary checkpoint and continues; a non-empty
+        // last step or fixpoint-pass checkpoint and continues; a non-empty
         // --state-dir makes the run itself resumable.
         useState.foreach(op.loadState)
-        val rc = op.execute(Option(stateDir).filter(_.nonEmpty), Int.MaxValue)
+        val rc = op.execute(Option(stateDir).filter(_.nonEmpty))
         op.errors.filter(_._2.nonEmpty).foreach { case (t, errs) =>
           System.err.println(s"$t: errors took place during extraction:")
           errs.foreach(e => System.err.println(s"  $e"))
@@ -172,15 +176,11 @@ object Main {
 
         val mappers = cfg.steps.flatMap(sc =>
           OperationConfig.mapper(sc, load = true).map(sc.sobject -> _)).toMap
-        val (initMap, initStage) = useState match {
-          case Some(s) =>
-            val (m, st) = LoadOperation.loadState(spark, s); (Some(m), st)
-          case None => (None, LoadStage.Inserts)
-        }
+        val restored = useState.map(LoadOperation.loadState(spark, _))
         new java.io.File(outDir).mkdirs()
         val store = new FileTableStore(spark, outDir, catalog.byName)
         val op = new LoadOperation(store, catalog, steps, inputs, mappers,
-          initMap, initStage)
+          restored.map(_._1), restored.fold(LoadStage.Inserts)(_._2))
         val rc = op.execute()
         // Result files (reference S6): Original Id, New Id, Error.
         cfg.steps.foreach { sc =>

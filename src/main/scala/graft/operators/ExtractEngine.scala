@@ -1,5 +1,6 @@
 package graft.operators
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -8,6 +9,7 @@ import graft.functions.GraftFunctions
 import graft.sources.TableStore
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import graft.core.Lineage.LineageOps
 
 /** Seeded-reachability extraction over a graph of FK-linked tables — the
@@ -82,7 +84,6 @@ final class ExtractOperation(
   private def errBuf(t: String) = errors.getOrElseUpdate(t, mutable.Buffer.empty)
 
   def getExtractedIds(t: String): DataFrame = extractedIds.getOrElse(t, emptyIds)
-  def getExtractedRows(t: String): Option[DataFrame] = extractedRows.get(t)
   def getRequiredIds(t: String): DataFrame = requiredIds.getOrElse(t, emptyIds)
 
   /** Canonicalize + column-prune a scan to the step's field scope.
@@ -362,409 +363,124 @@ final class ExtractOperation(
       .exists(rows => storeResult(step, ls, rows))
   }
 
-  /** Run all steps in order; stop at the first step with errors (reference
-    * ExtractOperation.execute, amaxa/amaxa.py:545-567). Returns 0 on
-    * success, -1 on error.
+  /** Mid-step (fixpoint) checkpoint state. `partialBuf` collects the
+    * lineage-cut row batches the CURRENT step has stored since the last
+    * save; each save drains it into one delta part, so a mid-step save
+    * costs O(rows discovered since the last save) — NOT O(accumulated
+    * rows), which over a deep fixpoint would be quadratic (the long job
+    * at 100 TB is exactly one table's O2 fixpoint). `partialDeltas` are
+    * the step's saved deltas, restored ones included: every mid-step
+    * manifest lists all of them, and a directory that lacks one (a resume
+    * that checkpoints elsewhere) gets it written.
     */
-  /** Steps already restored by [[loadState]]; [[execute]] skips them. */
-  private var resumeFrom: Int = 0
+  private val partialBuf = mutable.Buffer.empty[DataFrame]
+  private val partialDeltas = mutable.Buffer.empty[DataFrame]
+  /** Set by [[loadState]] when the checkpoint ended mid-step: the
+    * in-progress table (its scope pass is already contained in the
+    * restored deltas, so the resumed step skips it) and the pass
+    * counter reached. */
+  private var resumePartial: Option[(String, Int)] = None
+
+  /** One [[StateDir]] per directory restored from or saved into: which
+    * frames a directory already holds is a fact about that directory. */
+  private val stateDirs = mutable.Map.empty[String, StateDir]
+  private def stateAt(dir: String): StateDir =
+    stateDirs.getOrElseUpdate(new java.io.File(dir).getCanonicalPath,
+      new StateDir(spark, dir, "extract_state.json"))
 
   /** Extract-stage checkpoint — the S7 load machinery applied to the
     * traversal, because at 100 TB the EXTRACT is the long job (the
-    * reference resumes only loads, amaxa/loader/state.py:10-32). Saved at
-    * step boundaries: the completed steps' accumulated row frames, every
-    * table's required-id set (later steps' sets are registered by earlier
-    * steps, so they are part of pass state), and a marker naming what is
-    * valid. Crash safety is structural, not just ordering: required-id
-    * sets go to a fresh `required_v<N>` dir per save and the marker is
-    * published by ATOMIC_MOVE, so a kill at any point leaves the previous
-    * marker pointing at fully intact parquet (see [[saveVersion]]); id
-    * sets are re-derivable from the row frames, so they are not persisted
-    * separately.
+    * reference resumes only loads, amaxa/loader/state.py:10-32). The
+    * manifest maps the completed steps' row frames, every table's
+    * required-id set (earlier steps register ids into later tables' sets,
+    * so they are pass state) and the row errors (pass state too: a
+    * resumed run whose passes dedup to zero new rows never re-detects
+    * them), plus, mid-step, the in-progress table's deltas and pass
+    * counter. Id sets are re-derivable from the row frames, so they are
+    * not persisted. A completed table's rows and an unchanged required
+    * set are the same frame as at the last save, so a directory writes
+    * each once: checkpoint cost is what the pass changed.
     */
-  /** Row dirs already persisted: a table's row frame is immutable once
-    * its step completes (later steps only touch their own table), so
-    * per-step saves write ONLY the newly completed table instead of
-    * rewriting every earlier one — keeps checkpoint cost O(step), not
-    * O(steps²) over a run. */
-  private val savedRowDirs = mutable.Set.empty[String]
-
-  /** Version counter for the required-id snapshot directories. Required
-    * sets are REWRITTEN on every save (earlier steps register ids into
-    * later tables' sets), so each save writes them to a fresh
-    * `required_v<N>` directory and only then publishes the marker — the
-    * previous version's parquet stays intact until the new marker lands,
-    * so a kill at ANY byte of the save leaves the old checkpoint fully
-    * authoritative (row dirs are write-once, see [[savedRowDirs]]).
-    */
-  private var saveVersion: Int = 0
-
-  /** Mid-step (fixpoint) checkpoint state — see [[saveStatePartial]].
-    * `partialBuf` collects the lineage-cut row batches the CURRENT step
-    * has stored since the last save; each save drains it into one
-    * append-only `partial_p<N>` delta dir, so a mid-step save costs
-    * O(rows discovered since the last save) — NOT O(accumulated rows),
-    * which over a deep fixpoint would be quadratic (the long job at
-    * 100 TB is exactly one table's O2 fixpoint). Delta dirs are
-    * immutable once written (the row-dir discipline), referenced by the
-    * marker's `partial.dirs` list, and GC'd when their step completes.
-    */
-  private val partialBuf = mutable.Buffer.empty[DataFrame]
-  private var partialSeq: Int = 0
-  private val partialDirs = mutable.Buffer.empty[Int]
-  /** Set by [[loadState]] when the checkpoint ended mid-step: the
-    * in-progress table (its scope pass is already contained in the
-    * restored partial rows, so the resumed step skips it) and the pass
-    * counter reached. */
-  private var resumePartial: Option[String] = None
-  private var resumePass: Int = 0
-
-  /** Run independent checkpoint parquet writes as ONE concurrent wave
-    * (Spark schedules jobs from multiple threads fine) and wait for ALL
-    * of them — including the siblings of a failed write, so no zombie
-    * write can race a retry's overwrite or gcStale. A save used to pay
-    * each table's write job sequentially — scheduler latency × table
-    * count per save; the wave pays ~one. The marker is still written
-    * strictly AFTER the wave completes, and ALL bookkeeping (savedRowDirs,
-    * reqSaved, partial buffers) mutates only after the wave succeeded, so
-    * a failed save is fully retryable and the previous marker stays the
-    * truth — the kill-at-any-byte contract is untouched.
-    */
-  private def awaitWrites(writes: Seq[() => Unit]): Unit =
-    if (writes.size <= 1) writes.foreach(_.apply())
-    else {
-      import scala.concurrent.{Await, Future, TimeoutException}
-      import scala.concurrent.duration._
-      implicit val ec = ExtractOperation.saveEc
-      // A bounded wait, not Duration.Inf: the wave runs on the SHARED
-      // save pool, so one silently hung write would otherwise block
-      // every future save in the JVM with zero diagnostic. Generous by
-      // default (a checkpoint write should take seconds);
-      // spark.graft.save.timeoutSec tunes it for pathological stores.
-      val confKey = "spark.graft.save.timeoutSec"
-      val timeoutSec = spark.conf.getOption(confKey).map { v =>
-        val n = try v.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$confKey must be a whole number of seconds, got '$v'")
-        }
-        // Positive and inside FiniteDuration's representable range: 0 or
-        // a negative would fail every healthy save instantly, an
-        // absurdly large value throws from Duration's own range check.
-        if (n <= 0 || n > 10L * 365 * 24 * 3600) throw new IllegalArgumentException(
-          s"$confKey must be in [1, ${10L * 365 * 24 * 3600}] seconds, got $n")
-        n
-      }.getOrElse(3600L)
-      // Each write runs under one cancellable job group so a timeout can
-      // KILL the stragglers before the save is reported failed — a retry
-      // must never race a zombie write to the same checkpoint path (the
-      // invariant this wave exists to guarantee). cancelJobGroup is not
-      // sticky (it only kills jobs active at that instant), so a shared
-      // flag ALSO gates each write: a queued future that starts after
-      // the cancel never submits its job at all.
-      val group = s"graft-save-wave-${java.util.UUID.randomUUID()}"
-      val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val sc = spark.sparkContext
-      val settled = Future.sequence(writes.map(w => Future {
-        if (cancelled.get) throw new IllegalStateException(
-          "write skipped: the save wave was already cancelled")
-        sc.setJobGroup(group, "graft checkpoint write wave",
-          interruptOnCancel = true)
-        try w() finally sc.clearJobGroup()
-      }.transform(scala.util.Success(_))))
-      val results = try Await.result(settled, timeoutSec.seconds) catch {
-        case e: TimeoutException =>
-          cancelled.set(true)
-          sc.cancelJobGroup(group)
-          val drained = try { Await.result(settled, 60.seconds); true }
-            catch { case _: TimeoutException => false }
-          // cancelJobGroup is not sticky: a queued write that passed the
-          // `cancelled` check before the flag was set can submit its
-          // Spark job AFTER the first cancellation fired. Re-issue after
-          // the drain (and once more before throwing) so late-submitted
-          // jobs in the group are also killed (ADVICE r11).
-          sc.cancelJobGroup(group)
-          throw new IllegalStateException(
-            s"checkpoint write wave (${writes.size} writes) exceeded " +
-              s"$timeoutSec s and was cancelled" +
-              (if (drained) "" else " — and some writes did NOT settle " +
-                "within the 60 s grace period; the shared save pool may " +
-                "be compromised") +
-              s"; raise $confKey if the store is genuinely this slow", e)
+  private def save(dir: String, partial: Option[(String, Int)]): Unit = {
+    val delta = partial.flatMap(_ => partialBuf.reduceOption(_ unionByName _))
+    val doc: Map[String, Any] = Map(
+      "completed" -> stepsCompleted,
+      "rows" -> order.take(stepsCompleted).flatMap(t => extractedRows.get(t).map(t -> _)).toMap,
+      "required" -> requiredIds,
+      "errors" -> errors.filter(_._2.nonEmpty)) ++
+      partial.map { case (t, pass) =>
+        "partial" -> Map("table" -> t, "pass" -> pass, "deltas" -> (partialDeltas ++ delta))
       }
-      // Surface EVERY failed sibling, not just the first: the retry
-      // decision needs to know whether one table or the whole store
-      // misbehaved.
-      val failures = results.collect { case scala.util.Failure(e) => e }
-      failures.headOption.foreach { first =>
-        failures.drop(1).foreach(first.addSuppressed)
-        throw first
-      }
-    }
-
-  /** Pending row-dir writes for tables completed since the last save.
-    * Returns (tables, deferred writes); the caller marks the tables saved
-    * only after the wave succeeded. */
-  private def pendingRowWrites(dir: String): (Seq[String], Seq[() => Unit]) = {
-    val pending = order.take(stepsCompleted).filterNot(savedRowDirs)
-      .flatMap(t => extractedRows.get(t).map(t -> _))
-    (pending.map(_._1), pending.map { case (t, rows) =>
-      () => rows.write.mode("overwrite").parquet(s"$dir/rows/$t")
-    })
+    stateAt(dir).publish(doc)
+    partialBuf.clear()
+    if (partial.isEmpty) partialDeltas.clear() else partialDeltas ++= delta
   }
 
-  def saveState(dir: String): Unit = {
-    val (rowTables, rowWrites) = pendingRowWrites(dir)
-    val (reqVers, reqPending, reqWrites) = requiredWrites(dir)
-    awaitWrites(rowWrites ++ reqWrites)
-    savedRowDirs ++= rowTables
-    reqPending.foreach { case (t, v, cur) => reqSaved(t) = (v, cur) }
-    val errVer = writeErrors(dir)
-    writeMarker(dir, markerJson(reqVers, errVer, partial = ""))
-    gcStale(dir, reqVers.map(_._2).toSet, errVer, keepPartials = false)
-    // The completed step's delta dirs were just deleted; forget them.
-    partialBuf.clear(); partialDirs.clear()
-  }
-
-  /** Fixpoint-granular checkpoint: drains [[partialBuf]] into a fresh
-    * immutable delta dir, rewrites the required-id snapshot, then
-    * publishes a marker whose `partial` entry names the in-progress
-    * table, the pass counter, and every live delta dir. Same crash
-    * discipline as [[saveState]]: all parquet lands before the marker
-    * moves, so a kill at any byte resumes from the previous marker.
-    */
-  private def saveStatePartial(dir: String, table: String, pass: Int): Unit = {
-    val deltaSeq: Option[Int] = if (partialBuf.nonEmpty) Some(partialSeq) else None
-    val deltaWrite: Seq[() => Unit] = deltaSeq.toSeq.map { seq =>
-      val delta = partialBuf.reduce(_ unionByName _)
-      () => delta.write.mode("overwrite").parquet(s"$dir/partial_p$seq/$table")
-    }
-    val (rowTables, rowWrites) = pendingRowWrites(dir)
-    val (reqVers, reqPending, reqWrites) = requiredWrites(dir)
-    awaitWrites(rowWrites ++ deltaWrite ++ reqWrites)
-    // Wave succeeded — only now does the in-memory state claim the dirs.
-    savedRowDirs ++= rowTables
-    reqPending.foreach { case (t, v, cur) => reqSaved(t) = (v, cur) }
-    deltaSeq.foreach { seq =>
-      partialDirs += seq
-      partialSeq += 1
-      partialBuf.clear()
-    }
-    val errVer = writeErrors(dir)
-    val partial = s""","partial":{"table":"$table","pass":$pass,""" +
-      s""""dirs":[${partialDirs.mkString(",")}]}"""
-    writeMarker(dir, markerJson(reqVers, errVer, partial))
-    gcStale(dir, reqVers.map(_._2).toSet, errVer, keepPartials = true)
-  }
-
-  /** Last persisted (version, frame identity) per required set — a set
-    * whose frame was not REASSIGNED since its last save (every mutation
-    * replaces the DataFrame reference) is not rewritten: the marker
-    * re-references the old version. Keeps per-pass checkpoint cost
-    * proportional to what the pass actually changed, not to every
-    * table's outstanding required ids. */
-  private val reqSaved = mutable.Map.empty[String, (Int, DataFrame)]
-
-  /** Version table + pending reqSaved updates + deferred writes for the
-    * required-id snapshots. The writes join the save's concurrent wave;
-    * the caller applies the reqSaved updates only AFTER the wave
-    * succeeded, so a failed save leaves every snapshot re-writable. */
-  private def requiredWrites(dir: String)
-      : (Seq[(String, Int)], Seq[(String, Int, DataFrame)], Seq[() => Unit]) = {
-    val ver = saveVersion
-    saveVersion += 1
-    val writes = Seq.newBuilder[() => Unit]
-    val pending = Seq.newBuilder[(String, Int, DataFrame)]
-    val vers = requiredIds.keys.toSeq.sorted.map { t =>
-      val cur = requiredIds(t)
-      reqSaved.get(t) match {
-        case Some((v, prev)) if prev eq cur => t -> v
-        case _ =>
-          pending += ((t, ver, cur))
-          writes += (() =>
-            cur.write.mode("overwrite").parquet(s"$dir/required_v$ver/$t"))
-          t -> ver
-      }
-    }
-    (vers, pending.result(), writes.result())
-  }
-
-  /** Error buffers are PASS STATE too: a mid-fixpoint kill after
-    * storeResult recorded outside-reference errors must not let the
-    * resumed run (whose scope/lookup passes dedup to zero new rows and
-    * so never re-detect them) exit 0 where the uninterrupted run exits
-    * -1. Records are one-per-line `base64(table):base64(message)` —
-    * messages interpolate DATA values (ids, field contents), so no
-    * plain-text separator is injection-proof; base64 is. Versioned and
-    * GC'd like the required snapshots. Returns -1 when there are no
-    * errors (marker omits the file). */
-  private var errSaved: (Int, Int) = (-1, 0) // (version, error count at save)
-
-  private def writeErrors(dir: String): Int = {
-    def b64(x: String): String = java.util.Base64.getEncoder
-      .encodeToString(x.getBytes("UTF-8"))
-    val all = errors.toSeq.sortBy(_._1)
-      .flatMap { case (t, buf) => buf.map(m => b64(t) + ":" + b64(m)) }
-    if (all.isEmpty) -1
-    else if (all.size == errSaved._2 && errSaved._1 >= 0) errSaved._1
-    else {
-      val ver = saveVersion
-      saveVersion += 1
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$dir/errors_v$ver.txt"), all.mkString("\n"))
-      errSaved = (ver, all.size)
-      ver
-    }
-  }
-
-  private def markerJson(reqVers: Seq[(String, Int)], errVer: Int,
-      partial: String): String = {
-    val done = order.take(stepsCompleted)
-    val err = if (errVer >= 0) s""","errver":$errVer""" else ""
-    s"""{"completed":$stepsCompleted,""" +
-      s""""rows":[${done.filter(extractedRows.contains).map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""required":[${reqVers.map { case (t, v) => s"""{"t":"$t","v":$v}""" }.mkString(",")}]""" +
-      err + partial + "}"
-  }
-
-  private def writeMarker(dir: String, json: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    // Marker published via temp file + ATOMIC_MOVE: a reader (or a crash)
-    // sees either the complete old marker or the complete new one, never a
-    // torn write.
-    val tmp = java.nio.file.Paths.get(s"$dir/extract_state.json.tmp")
-    java.nio.file.Files.writeString(tmp, json)
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(s"$dir/extract_state.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Unreferenced snapshots after a marker publish — required_v*
-    * versions no live table references and superseded errors_v* files
-    * always; partial_p* deltas once their step completed (best effort;
-    * a leftover dir is garbage, never a correctness hazard). */
-  private def gcStale(dir: String, liveReqVers: Set[Int], errVer: Int,
-      keepPartials: Boolean): Unit =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter { f =>
-        val n = f.getName
-        (f.isDirectory && (
-          (n.startsWith("required_v") &&
-            !scala.util.Try(n.stripPrefix("required_v").toInt).toOption
-              .exists(liveReqVers.contains)) ||
-          n == "required" || // legacy in-place layout, superseded
-          (!keepPartials && n.startsWith("partial_p")))) ||
-        (n.startsWith("errors_v") && n.endsWith(".txt") &&
-          n != s"errors_v$errVer.txt")
-      }
-      .foreach(f => try graft.core.Fs.deleteRecursively(f.getPath)
-        catch { case _: Exception => () })
-
-  /** Restore a [[saveState]] checkpoint: completed tables' rows (+ id
-    * sets re-derived from them), required-id sets, and the resume point.
-    * Restored required sets are marked dirty so the first resolve pass
-    * of each remaining step actually runs.
+  /** Restore a checkpoint: completed tables' rows (+ id sets re-derived
+    * from them), required-id sets, row errors and the resume point. The
+    * restored frames are lineage-cut, so they never read a part a later
+    * save deletes; the in-progress table's deltas are kept uncut only to
+    * be listed (or copied) by the next mid-step save. Restored required
+    * sets are marked dirty so the first resolve pass of each remaining
+    * step actually runs. Throws [[StateDir.Unreadable]], before restoring
+    * anything, when `dir` holds no readable checkpoint.
     */
   def loadState(dir: String): Unit = {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/extract_state.json")), "UTF-8")
-    def list(key: String): Seq[String] =
-      s""""$key":\\[([^\\]]*)\\]""".r.findFirstMatchIn(txt)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
-    resumeFrom = """"completed":(\d+)""".r.findFirstMatchIn(txt)
-      .map(_.group(1).toInt).getOrElse(0)
-    list("rows").foreach { t =>
-      val rows = graft.core.Lineage.cut(spark.read.parquet(s"$dir/rows/$t"))
-      extractedRows(t) = rows
-      extractedIds(t) = idsOf(rows, t)
-      savedRowDirs += t
+    val sd = stateAt(dir)
+    val m = sd.read()
+    def restored(name: JsonNode): DataFrame = sd.part(name.asText(), graft.core.Lineage.cut)
+    stepsCompleted = m.path("completed").asInt()
+    m.path("rows").properties().asScala.foreach { e =>
+      val rows = restored(e.getValue)
+      extractedRows(e.getKey) = rows
+      extractedIds(e.getKey) = idsOf(rows, e.getKey)
     }
-    // Required-id snapshots: per-table versioned entries ({"t":..,"v":N}
-    // — only sets a save actually changed were rewritten at that save's
-    // version); legacy fallbacks: a single global "reqver", or the
-    // original in-place `required/` layout.
-    val perTable = """\{"t":"([^"]+)","v":(\d+)\}""".r
-      .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toInt).toSeq
-    val legacyVer = """"reqver":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-    val reqEntries: Seq[(String, String, Option[Int])] =
-      if (perTable.nonEmpty)
-        perTable.map { case (t, v) => (t, s"required_v$v/$t", Some(v)) }
-      else list("required").map { t =>
-        (t, legacyVer.map(v => s"required_v$v/$t").getOrElse(s"required/$t"), legacyVer)
-      }
-    reqEntries.foreach { case (t, path, v) =>
-      val frame = graft.core.Lineage.cut(spark.read.parquet(s"$dir/$path"))
-      requiredIds(t) = frame
-      v.foreach(ver => reqSaved(t) = (ver, frame))
-      depsDirty += t
+    m.path("required").properties().asScala.foreach { e =>
+      requiredIds(e.getKey) = restored(e.getValue)
+      depsDirty += e.getKey
     }
-    val errVer = """"errver":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-    errVer.foreach { v =>
-      def un64(x: String): String =
-        new String(java.util.Base64.getDecoder.decode(x), "UTF-8")
-      val raw = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/errors_v$v.txt")), "UTF-8")
-      val recs = raw.split("\n").filter(_.nonEmpty)
-      recs.foreach { r =>
-        val i = r.indexOf(':')
-        errBuf(un64(r.substring(0, i))) += un64(r.substring(i + 1))
-      }
-      errSaved = (v, recs.length)
+    m.path("errors").properties().asScala.foreach { e =>
+      errBuf(e.getKey) ++= e.getValue.elements().asScala.map(_.asText())
     }
-    saveVersion = ((reqEntries.flatMap(_._3) ++ errVer) :+ -1).max + 1
     // Mid-step (fixpoint) checkpoint: the in-progress table's accumulated
-    // rows are the union of the marker's delta dirs. Its scope pass is
-    // contained in delta 0, so the resumed step re-enters directly at
+    // rows are the union of its deltas. Its scope pass is contained in
+    // the first delta, so the resumed step re-enters directly at
     // dependency resolution + the fixpoint loop (idempotent either way —
     // storeResult dedups against the restored id set).
-    """"partial":\{"table":"([^"]+)","pass":(\d+),"dirs":\[([0-9,\s]*)\]\}""".r
-      .findFirstMatchIn(txt).foreach { m =>
-        val t = m.group(1)
-        resumePass = m.group(2).toInt
-        val dirs = m.group(3).split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-        if (dirs.nonEmpty) {
-          val rows = graft.core.Lineage.cut(
-            dirs.map(n => spark.read.parquet(s"$dir/partial_p$n/$t"))
-              .reduce(_ unionByName _))
-          extractedRows(t) = rows
-          extractedIds(t) = idsOf(rows, t)
-          resumePartial = Some(t)
-          partialDirs ++= dirs
-          partialSeq = dirs.max + 1
-        }
+    val p = m.path("partial")
+    if (p.isObject) {
+      val t = p.path("table").asText()
+      val deltas = p.path("deltas").elements().asScala.map(n => sd.part(n.asText())).toSeq
+      if (deltas.nonEmpty) {
+        val rows = graft.core.Lineage.cut(deltas.reduce(_ unionByName _))
+        extractedRows(t) = rows
+        extractedIds(t) = idsOf(rows, t)
+        resumePartial = Some(t -> p.path("pass").asInt())
+        partialDeltas ++= deltas
       }
+    }
   }
 
+  /** Steps completed, restored ones included; [[execute]] skips them. */
   private var stepsCompleted: Int = 0
 
-  def execute(): Int = execute(None, Int.MaxValue)
-
-  /** [[execute]] with checkpointing: `stateDir` saves a resumable
-    * checkpoint after every completed step; `stopAfterSteps` ends the run
-    * early with exit code 1 (incomplete-but-resumable — the controlled
-    * form of the kill the checkpoint exists for, and what the
-    * x_engine_extract_resume oracle row and ExtractEngineSpec's
-    * byte-identical-CSV test exercise).
+  /** Run all steps in order; stop at the first step with errors (reference
+    * ExtractOperation.execute, amaxa/amaxa.py:545-567). Returns 0 on
+    * success, -1 on error, 1 on a bounded stop (incomplete-but-resumable).
+    *
+    * With a `stateDir`, a checkpoint is saved after every completed step
+    * and after every CHANGED self-lookup fixpoint pass, so at 100 TB —
+    * where the long job is ONE table's fixpoint (reference loop
+    * amaxa/amaxa.py:696-726) — a kill loses at most one pass.
+    * `stopAfterSteps` / `stopAfterPasses` end the run after that many
+    * completed steps / changed passes this run: the controlled form of
+    * the kill the checkpoint exists for (x_engine_extract_resume,
+    * ExtractEngineSpec's byte-identical-CSV tests). Monotone-closure
+    * correctness: ids only grow and every pass dedups against them, so
+    * resuming from any pass boundary converges to the identical set.
     */
-  def execute(stateDir: Option[String], stopAfterSteps: Int): Int =
-    execute(stateDir, stopAfterSteps, Int.MaxValue)
-
-  /** [[execute]] with PASS-granular checkpointing on top of the
-    * step-granular form: `stopAfterPasses` ends the run with exit 1
-    * after that many CHANGED fixpoint passes have been saved this run —
-    * the controlled kill for mid-fixpoint resume, mirroring
-    * `stopAfterSteps` one level down. With a `stateDir`, every changed
-    * fixpoint pass publishes a [[saveStatePartial]] checkpoint, so at
-    * 100 TB — where the long job is ONE table's self-lookup fixpoint
-    * (reference loop amaxa/amaxa.py:696-726) — a kill loses at most one
-    * pass, not the whole traversal. Monotone-closure correctness: ids
-    * only grow and every pass dedups against them, so resuming from any
-    * pass boundary converges to the identical extracted set.
-    */
-  def execute(stateDir: Option[String], stopAfterSteps: Int,
-      stopAfterPasses: Int): Int = {
+  def execute(stateDir: Option[String] = None, stopAfterSteps: Int = Int.MaxValue,
+      stopAfterPasses: Int = Int.MaxValue): Int = {
     // A pass-bounded stop without a state dir would return the
     // "incomplete-but-resumable" code with nothing on disk to resume
     // from — all work silently lost. Fail fast instead.
@@ -777,21 +493,20 @@ final class ExtractOperation(
     // otherwise never pay (see graft.core.Log).
     graft.core.Log.info(
       s"Starting extraction with sObjects ${steps.map(_.sobject).mkString(", ")}")
-    stepsCompleted = resumeFrom
-    steps.drop(resumeFrom).foreach { step =>
+    steps.drop(stepsCompleted).foreach { step =>
       val t = step.sobject
       graft.core.Log.info(s"$t: starting extraction")
       val ls = catalog.classifyLookups(order, t, step.fieldScope)
-      val resumingMidStep = resumePartial.contains(t)
+      val resumedPass = resumePartial.collect { case (`t`, pass) => pass }
       resumePartial = None
-      if (!resumingMidStep) partialBuf.clear()
+      partialBuf.clear() // a restore fills partialDeltas, never this
 
       // A mid-step resume restored rows that already CONTAIN the scope
-      // pass (delta 0 is scope + first resolves) — skip straight to
+      // pass (the first delta is scope + first resolves) — skip straight to
       // dependency resolution. Re-running it would be a correct no-op
       // (storeResult dedups against the restored ids) but pays a full
       // scan for zero new rows.
-      if (!resumingMidStep) step.scope match {
+      if (resumedPass.isEmpty) step.scope match {
         case ExtractionScope.AllRecords =>
           storeResult(step, ls, scanScoped(step))
         case ExtractionScope.Query(where) =>
@@ -816,7 +531,7 @@ final class ExtractOperation(
       if (ls.self.nonEmpty &&
           step.selfLookupBehavior == SelfLookupBehavior.TraceAll &&
           step.scope != ExtractionScope.AllRecords) {
-        var pass = if (resumingMidStep) resumePass else 0
+        var pass = resumedPass.getOrElse(0)
         var passesThisRun = 0
         var changed = true
         while (changed) {
@@ -826,7 +541,7 @@ final class ExtractOperation(
           if (changed) {
             pass += 1
             passesThisRun += 1
-            stateDir.foreach(saveStatePartial(_, t, pass))
+            stateDir.foreach(save(_, Some(t -> pass)))
             if (passesThisRun >= stopAfterPasses) {
               graft.core.Log.info(
                 s"$t: stopping after fixpoint pass $pass (resumable)")
@@ -841,7 +556,7 @@ final class ExtractOperation(
       graft.core.Log.debug(
         s"$t: extracted ${getExtractedIds(t).count()} records")
       stepsCompleted += 1
-      stateDir.foreach(saveState)
+      stateDir.foreach(save(_, None))
       if (stepsCompleted >= stopAfterSteps && stepsCompleted < steps.size)
         return 1
     }
@@ -884,21 +599,4 @@ final class ExtractOperation(
 
   def writeCsv(table: String, path: String, mapper: Option[DataMapper] = None): Unit =
     result(table, mapper).write.mode("overwrite").option("header", true).csv(path)
-}
-
-object ExtractOperation {
-  /** Shared pool for checkpoint write waves (daemon threads so a dying
-    * application never hangs on it; sized for the widest realistic save
-    * wave, not for throughput — each task just blocks on a Spark job). */
-  private[operators] lazy val saveEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(8,
-        new java.util.concurrent.ThreadFactory {
-          private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-          def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"graft-save-${n.getAndIncrement()}")
-            t.setDaemon(true)
-            t
-          }
-        }))
 }

@@ -336,24 +336,30 @@ final class LoadOperation(
     0
   }
 
-  /** Checkpoint/resume (reference loader/state.py + S7): id map as parquet
-    * + stage marker. */
+  /** Checkpoint/resume (reference loader/state.py + S7): the stage and
+    * the id map as one part, published in a `stage.json` manifest (see
+    * [[StateDir]]). The id map then reads the part just written, so it
+    * never reads a part a later save deletes — a resumed map reads the
+    * previous save's part, which this save's publish removes. */
   def saveState(dir: String): Unit = {
-    idMap.write.mode("overwrite").parquet(s"$dir/id_map")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/stage.json"),
-      s"""{"stage":"${stage.toString}"}""")
+    val sd = new StateDir(spark, dir, LoadOperation.Manifest)
+    sd.publish(Map("stage" -> stage.toString, "id_map" -> idMap))
+    idMap = sd.reread(idMap)
   }
 }
 
 object LoadOperation {
-  /** Restore (idMap, stage) saved by [[LoadOperation.saveState]]. */
+  private val Manifest = "stage.json"
+
+  /** Restore (idMap, stage) saved by [[LoadOperation.saveState]]; throws
+    * [[StateDir.Unreadable]] when `dir` holds no readable checkpoint. */
   def loadState(spark: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, LoadStage.Value) = {
-    val idMap = spark.read.parquet(s"$dir/id_map")
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/stage.json")))
-    val stage = if (txt.contains("Dependents")) LoadStage.Dependents else LoadStage.Inserts
-    (idMap, stage)
+    val sd = new StateDir(spark, dir, Manifest)
+    val m = sd.read()
+    val name = m.path("stage").asText()
+    val stage = LoadStage.values.find(_.toString == name).getOrElse(
+      throw new StateDir.Unreadable(dir, s"unknown load stage '$name'"))
+    (sd.part(m.path("id_map").asText()), stage)
   }
 }

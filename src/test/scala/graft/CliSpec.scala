@@ -163,9 +163,10 @@ class CliSpec extends AnyFunSuite {
     assert(names == expected)
   }
 
-  test("failed load persists completed tables; resume finishes without loss") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_resume").toString
+  /** A load of the fixture whose Contact batch has one invalid boolean,
+    * so it stops after Account; `fixContacts` repairs the batch. */
+  def badLoadRoot(prefix: String): String = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
     Seq("describes", "src", "target").foreach(s => new java.io.File(s"$root/$s").mkdirs())
     writeDescribes(s"$root/describes")
     val opYml =
@@ -181,12 +182,19 @@ class CliSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/op.yml"), opYml)
     Fixture.accounts.write.mode("overwrite").option("header", true)
       .csv(s"$root/src/Account.csv")
-    // Contact batch contains one invalid boolean → load stops after Account.
     Fixture.contacts
       .withColumn("IsEmailBounced",
         org.apache.spark.sql.functions.when(col("LastName") === "Tigh",
           org.apache.spark.sql.functions.lit("broken")).otherwise(col("IsEmailBounced")))
       .write.mode("overwrite").option("header", true).csv(s"$root/src/Contact.csv")
+    root
+  }
+  def fixContacts(root: String): Unit =
+    Fixture.contacts.write.mode("overwrite").option("header", true)
+      .csv(s"$root/src/Contact.csv")
+
+  test("failed load persists completed tables; resume finishes without loss") {
+    val root = badLoadRoot("graft_resume")
 
     assert(cli.Main.run(Array(s"$root/op.yml", "--load",
       "--describe-dir", s"$root/describes",
@@ -199,8 +207,7 @@ class CliSpec extends AnyFunSuite {
     assert(new java.io.File(s"$root/target/_state/stage.json").exists())
 
     // Fix the data and resume with the saved state.
-    Fixture.contacts.write.mode("overwrite").option("header", true)
-      .csv(s"$root/src/Contact.csv")
+    fixContacts(root)
     assert(cli.Main.run(Array(s"$root/op.yml", "--load",
       "--describe-dir", s"$root/describes",
       "--data-dir", s"$root/src", "--out-dir", s"$root/target",
@@ -215,6 +222,80 @@ class CliSpec extends AnyFunSuite {
     val capricaNew = accounts2.where(col("Name") === "Caprica Cosmetics")
       .collect().head.getAs[String]("Id")
     assert(contacts2.where(col("AccountId") === capricaNew).count() == 2)
+  }
+
+  test("a resumed load that fails again keeps its checkpoint; fixing the " +
+       "data and resuming again finishes without loss") {
+    val root = badLoadRoot("graft_resume2")
+    def load(resume: Boolean): Int = cli.Main.run(Array(s"$root/op.yml", "--load",
+      "--describe-dir", s"$root/describes",
+      "--data-dir", s"$root/src", "--out-dir", s"$root/target") ++
+      (if (resume) Seq("--use-state", s"$root/target/_state") else Nil))
+    assert(load(resume = false) == 1)
+    val run1AccountIds = spark.read.parquet(s"$root/target/Account.parquet")
+      .select("Id").collect().map(_.getString(0)).toSet
+    assert(run1AccountIds.size == 5)
+    // Still bad: the resumed run fails like the first one and saves its
+    // state again, over the checkpoint it resumed from.
+    assert(load(resume = true) == 1)
+    fixContacts(root)
+    assert(load(resume = true) == 0)
+    val accounts = spark.read.parquet(s"$root/target/Account.parquet")
+      .select("Id").collect().map(_.getString(0)).toSeq
+    assert(accounts.size == 5 && accounts.toSet == run1AccountIds,
+      s"accounts re-inserted or lost across two resumes: $accounts")
+    assert(spark.read.parquet(s"$root/target/Contact.parquet").count() == 4)
+  }
+
+  /** Runs `args` through the CLI; (exit code, stderr lines naming state). */
+  def runCapturingStateErrors(args: String*): (Int, Seq[String]) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val ps = new java.io.PrintStream(buf, true)
+    val old = System.err
+    System.setErr(ps)
+    val rc = try cli.Main.run(args.toArray) finally { System.setErr(old); ps.flush() }
+    (rc, buf.toString.linesIterator.filter(_.contains("Cannot read state")).toSeq)
+  }
+
+  /** An extract root and a failed-load root, each with a `--use-state`
+    * directory that `prepare` fills: both runs must exit 2 with one line
+    * starting with the `reason` for the manifest's name. */
+  def assertStateRejected(prepare: (String, String) => Unit,
+      reason: String => String): Unit = {
+    val ext = java.nio.file.Files.createTempDirectory("graft_state_x").toString
+    new java.io.File(s"$ext/describes").mkdirs()
+    writeDescribes(s"$ext/describes")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$ext/op.yml"), opYaml)
+    val loadRoot = badLoadRoot("graft_state_l")
+    Seq((ext, "extract_state.json", Seq.empty[String]),
+        (loadRoot, "stage.json", Seq("--load"))).foreach { case (root, manifest, flag) =>
+      val state = s"$root/state"
+      new java.io.File(state).mkdirs()
+      prepare(state, manifest)
+      val (rc, lines) = runCapturingStateErrors(Seq(s"$root/op.yml") ++ flag ++ Seq(
+        "--describe-dir", s"$root/describes", "--data-dir", s"$root/src",
+        "--out-dir", s"$root/out", "--use-state", state): _*)
+      assert(rc == 2)
+      assert(lines.size == 1 &&
+        lines.head.startsWith(s"Cannot read state from $state: ${reason(manifest)}"), lines)
+    }
+  }
+
+  test("--use-state without a manifest exits 2 with one line") {
+    assertStateRejected((_, _) => (), m => s"no $m")
+  }
+
+  test("--use-state with a garbled or old-layout manifest exits 2 with one line") {
+    def write(state: String, m: String, text: String): Unit =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$state/$m"), text)
+    val garbled = "{\"completed\": 1, \"rows\": ["
+    assertStateRejected((state, m) => write(state, m, garbled),
+      m => s"$m is not JSON (Unexpected end-of-input")
+    // The layout before the manifest: extract markers listed row dirs by
+    // name, load markers named only the stage.
+    assertStateRejected((state, m) => write(state, m,
+        if (m == "stage.json") """{"stage":"Inserts"}""" else """{"completed":1,"rows":["Account"]}"""),
+      m => s"$m is not a layout-2 manifest (state saved by an older version cannot be resumed)")
   }
 
   test("CLI check-only validates without running") {

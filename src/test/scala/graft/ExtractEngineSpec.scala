@@ -86,6 +86,40 @@ class ExtractEngineSpec extends AnyFunSuite {
   def ids(df: DataFrame): Set[String] =
     df.select("Id").collect().map(_.getString(0)).toSet
 
+  /** 10-node parent chain seeded in the middle: closure needs ~5 changed
+    * fixpoint passes (one parent + one child frontier per pass), so a
+    * stop after pass 1 or 2 is a genuine MID-fixpoint kill. */
+  def deep: DataFrame = {
+    import spark.implicits._
+    (1 to 10).map(i => (acct(i), if (i == 6) "Seed" else s"A$i",
+      if (i == 1) null.asInstanceOf[String] else acct(i - 1)))
+      .toDF("Id", "Name", "ParentId")
+  }
+  def deepSteps = Seq(
+    ExtractStep("Account", ExtractionScope.Query("Name = 'Seed'"),
+      Seq("Id", "Name", "ParentId")))
+  def csvOf(op: ExtractOperation, dir: String): String = {
+    val path = s"$dir/Account"
+    op.writeCsv("Account", path)
+    new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+      .mkString.linesIterator.toSeq.sorted.mkString("\n")
+  }
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  def manifest(dir: String): com.fasterxml.jackson.databind.JsonNode =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$dir/extract_state.json"))
+  /** Every part the manifest's roles name: rows, required sets, deltas. */
+  def referencedParts(m: com.fasterxml.jackson.databind.JsonNode): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    (m.path("rows").elements().asScala ++ m.path("required").elements().asScala ++
+      m.path("partial").path("deltas").elements().asScala).map(_.asText()).toSet
+  }
+  def listing(dir: String): Set[String] = new java.io.File(dir).list().toSet
+
   test("self-lookup fixpoint traces the whole connected tree (integration.py:59-90)") {
     val op = new ExtractOperation(store("Account" -> accounts), catalog, Seq(
       ExtractStep("Account", ExtractionScope.Query("Name = 'Caprica Cosmetics'"),
@@ -272,26 +306,9 @@ class ExtractEngineSpec extends AnyFunSuite {
 
   test("mid-fixpoint resume: kill after pass 2 of a deep self-lookup " +
        "chain, restore, finish — CSVs byte-identical to an uninterrupted run") {
-    import spark.implicits._
-    // 10-node parent chain seeded in the middle: closure needs ~5 changed
-    // fixpoint passes (one parent + one child frontier per pass), so a
-    // stop after pass 2 is a genuine MID-fixpoint kill — the state on
-    // disk is a partial marker ("partial" entry, completed = 0), not a
-    // step boundary.
-    val deep = (1 to 10).map(i => (acct(i), if (i == 6) "Seed" else s"A$i",
-      if (i == 1) null.asInstanceOf[String] else acct(i - 1)))
-      .toDF("Id", "Name", "ParentId")
-    def mkSteps = Seq(
-      ExtractStep("Account", ExtractionScope.Query("Name = 'Seed'"),
-        Seq("Id", "Name", "ParentId")))
-    def csvOf(op: ExtractOperation, dir: String): String = {
-      val path = s"$dir/Account"
-      op.writeCsv("Account", path)
-      new java.io.File(path).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-        .mkString.linesIterator.toSeq.sorted.mkString("\n")
-    }
+    // A stop after pass 2 of the deep chain: the state on disk is a
+    // partial marker ("partial" entry, completed = 0), not a step boundary.
+    def mkSteps = deepSteps
 
     val straightDir = java.nio.file.Files.createTempDirectory("graft_xfp_a").toString
     val opA = new ExtractOperation(store("Account" -> deep), catalog, mkSteps)
@@ -320,20 +337,16 @@ class ExtractEngineSpec extends AnyFunSuite {
     val finalMarker = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$stateDir/extract_state.json")), "UTF-8")
     assert(!finalMarker.contains("\"partial\""), finalMarker)
-    assert(!new java.io.File(stateDir).listFiles()
-      .exists(_.getName.startsWith("partial_p")),
-      "delta dirs must be GC'd once their step completes")
+    // The deltas were deleted with their step: the directory holds
+    // exactly the manifest and the parts its roles name.
+    val m = manifest(stateDir)
+    assert(listing(stateDir) == referencedParts(m) + "extract_state.json",
+      s"state dir ${listing(stateDir)} vs manifest $m")
   }
 
   test("double-kill mid-fixpoint: kill at pass 1, resume, kill again one " +
        "pass later, resume to completion — still byte-identical") {
-    import spark.implicits._
-    val deep = (1 to 10).map(i => (acct(i), if (i == 6) "Seed" else s"A$i",
-      if (i == 1) null.asInstanceOf[String] else acct(i - 1)))
-      .toDF("Id", "Name", "ParentId")
-    def mkSteps = Seq(
-      ExtractStep("Account", ExtractionScope.Query("Name = 'Seed'"),
-        Seq("Id", "Name", "ParentId")))
+    def mkSteps = deepSteps
     val opA = new ExtractOperation(store("Account" -> deep), catalog, mkSteps)
     assert(opA.execute() == 0)
     val want = ids(opA.result("Account"))
@@ -358,6 +371,46 @@ class ExtractEngineSpec extends AnyFunSuite {
     assert(op3.execute(Some(stateDir), Int.MaxValue) == 0)
     assert(ids(op3.result("Account")) == want,
       "twice-killed, twice-resumed extract must close over the whole chain")
+  }
+
+  test("resume into another directory: kill into A, resume from A " +
+       "checkpointing into B, kill again, resume from B — byte-identical") {
+    val opA = new ExtractOperation(store("Account" -> deep), catalog, deepSteps)
+    assert(opA.execute() == 0)
+    val want = csvOf(opA, tempDir("graft_x2d_a"))
+
+    val (dirA, dirB) = (tempDir("graft_x2d_stateA"), tempDir("graft_x2d_stateB"))
+    val op1 = new ExtractOperation(store("Account" -> deep), catalog, deepSteps)
+    assert(op1.execute(Some(dirA), Int.MaxValue, stopAfterPasses = 1) == 1)
+    // B must receive every part its manifest names, including the ones
+    // restored from A, or the resume from B reads parts B lacks.
+    val op2 = new ExtractOperation(store("Account" -> deep), catalog, deepSteps)
+    op2.loadState(dirA)
+    assert(op2.execute(Some(dirB), Int.MaxValue, stopAfterPasses = 1) == 1)
+    val op3 = new ExtractOperation(store("Account" -> deep), catalog, deepSteps)
+    op3.loadState(dirB)
+    assert(op3.execute(Some(dirB), Int.MaxValue) == 0)
+    val got = csvOf(op3, tempDir("graft_x2d_b"))
+    assert(got == want, s"resumed-elsewhere CSV differs:\n$got\nvs\n$want")
+  }
+
+  test("torn save: a stray part is ignored by resume and deleted by the " +
+       "next publish") {
+    import spark.implicits._
+    val dir = tempDir("graft_xtorn_state")
+    val op1 = new ExtractOperation(store("Account" -> deep), catalog, deepSteps)
+    assert(op1.execute(Some(dir), Int.MaxValue, stopAfterPasses = 1) == 1)
+    // What a save killed before its publish leaves: a complete part the
+    // manifest does not name. A resume that read it would extract acct 99.
+    val stray = "extract_state-stray.parquet"
+    Seq((acct(99), "Stray", acct(6))).toDF("Id", "Name", "ParentId")
+      .write.parquet(s"$dir/$stray")
+    val op2 = new ExtractOperation(store("Account" -> deep), catalog, deepSteps)
+    op2.loadState(dir)
+    assert(op2.execute(Some(dir), Int.MaxValue) == 0)
+    assert(ids(op2.result("Account")) == (1 to 10).map(acct).toSet)
+    assert(!listing(dir).contains(stray), "the next publish must delete the stray part")
+    assert(listing(dir) == referencedParts(manifest(dir)) + "extract_state.json")
   }
 
   test("mid-fixpoint kill preserves recorded row errors: the resumed run " +
