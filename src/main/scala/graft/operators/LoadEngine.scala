@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Catalog
+import graft.functions.GraftFunctions
 import graft.sources.TableStore
 
 import scala.collection.mutable
@@ -144,16 +145,9 @@ final class LoadOperation(
       val c = col(f).cast("string")
       soap match {
         case "xsd:boolean" =>
-          val l = lower(c)
           out = out
-            .withColumn(s"__err_bool_$f",
-              when(c.isNotNull &&
-                !l.isin("no", "false", "n", "f", "0", "", "yes", "true", "y", "t", "1"),
-                concat(lit("Invalid Boolean value "), c)).otherwise(lit(null).cast("string")))
-            .withColumn(f,
-              when(c.isNull || l.isin("no", "false", "n", "f", "0", ""), lit("false"))
-                .when(l.isin("yes", "true", "y", "t", "1"), lit("true"))
-                .otherwise(lit(null).cast("string")))
+            .withColumn(s"__err_bool_$f", GraftFunctions.primitivizeBoolError(c))
+            .withColumn(f, GraftFunctions.primitivizeBool(c).cast("string"))
         case "tns:ID" | "xsd:string" | "xsd:date" | "xsd:dateTime" | "xsd:int" | "xsd:double" =>
           out = out.withColumn(f, when(c.isNull || c === "", lit(null).cast("string")).otherwise(c))
         case _ =>

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.DriverSchema
 
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
@@ -91,7 +92,7 @@ private[graft] final class StateDir(spark: SparkSession, dir: String, manifest: 
 
   /** A part named by the manifest, read through `f`; this directory holds it. */
   def part(name: String, f: DataFrame => DataFrame = identity): DataFrame =
-    hold(f(spark.read.parquet(path(name))), name)
+    hold(f(DriverSchema.read(spark, path(name), "parquet")), name)
 
   /** Record that this directory holds `df` as part `name`, so a later
     * publish references the part instead of rewriting it. */

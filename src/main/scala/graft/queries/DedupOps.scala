@@ -104,12 +104,8 @@ object DedupOps {
   private def computeMinhashPairs(s: SparkSession, d: String): DataFrame = {
     // Materialize signatures ONCE (the hash fan-out is the expensive part;
     // without this the self-join would recompute 32×|shingles| hashes per
-    // side and per band). repartition first: a small corpus file is one
-    // input split, which would serialize the whole hash fan-out into a
-    // single task (at production scale the scan is already split).
-    val sigs = minhashSignatures(
-      Tables.documents(s, d).repartition(s.sparkContext.defaultParallelism))
-      .cutLineage
+    // side and per band).
+    val sigs = minhashSignatures(Tables.documents(s, d)).cutLineage
     // Candidate generation on (band, bucket, id) only — no array payloads
     // through the shuffle.
     val banded = bandBuckets(sigs)
@@ -160,10 +156,7 @@ object DedupOps {
     * machinery (no new operator).
     */
   private val simhashPairs: Q = (s, d) => {
-    // repartition: same single-input-split consideration as d2/d4.
-    val sh = simhash(
-      Tables.documents(s, d).repartition(s.sparkContext.defaultParallelism))
-      .cutLineage
+    val sh = simhash(Tables.documents(s, d)).cutLineage
     val twoLevel = s.conf.getOption(SimhashTwoLevelConf)
       .exists(_.trim.equalsIgnoreCase("true"))
     val bands: Seq[Column] =
@@ -246,12 +239,7 @@ object DedupOps {
     // char_ngrams returns [] for texts shorter than 3 chars — matching
     // DuckDB's empty generate_series (Spark's sequence(1, len-2) would
     // count DOWN for len<3 and fabricate phantom grams).
-    // repartition BEFORE the gram/histogram compute: a small corpus file
-    // arrives as one input split, which would serialize all per-row work
-    // into a single task (at production scale the scan is already split;
-    // the shuffle moves only the raw text once).
     val g = Tables.documents(s, d)
-      .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), col("lang"),
         graft.functions.GraftFunctions.char_ngrams(col("text"), 3).as("grams"))
       .withColumn("hist", graft.functions.GraftFunctions.gram_hist64(col("grams")))
@@ -693,11 +681,7 @@ object DedupOps {
     */
   private val lshRecallEval: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    // repartition first (the computeMinhashPairs discipline): a small
-    // corpus file is ONE input split, and without the spread the whole
-    // quadratic intersect arm runs on a single task.
-    val sh = minhashSignatures(
-      docs.repartition(s.sparkContext.defaultParallelism))
+    val sh = minhashSignatures(docs)
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .select(col("lang"), col("doc_id"), col("shingles"),
         graft.functions.GraftFunctions.gram_hist64(col("shingles")).as("hist"))
@@ -854,7 +838,7 @@ object DedupOps {
         floor(col("n_dup_windows") * lit(1000000L) / col("n_windows")).cast("long"))
   }
 
-  private val dupSpans: Q = (s, d) => dupSpansOf(Tables.documentsSpread(s, d))
+  private val dupSpans: Q = (s, d) => dupSpansOf(Tables.documents(s, d))
 
   /** Duplicated-span REMOVAL (d17) — the repair action d9's detection
     * signal exists for (Lee et al. 2022 remove the duplicated substring,
@@ -896,7 +880,7 @@ object DedupOps {
           p => element_at(col("toks"), p)), " ").as("scrubbed"))
   }
 
-  private val spanScrub: Q = (s, d) => spanScrubOf(Tables.documentsSpread(s, d))
+  private val spanScrub: Q = (s, d) => spanScrubOf(Tables.documents(s, d))
 
   /** Cluster dedup with a QUALITY keeper: production pipelines keep the
     * BEST document of a near-dup cluster (longest / highest-scoring), not
@@ -1022,8 +1006,7 @@ object DedupOps {
     graft.core.Materialize.onceBucketed(
         s, s"d14_corpus_sigs:$d", 32, "doc_id") {
       minhashSignatures(
-        Tables.documents(s, d).where(col("source") =!= IncomingSource)
-          .repartition(s.sparkContext.defaultParallelism))
+        Tables.documents(s, d).where(col("source") =!= IncomingSource))
     }
 
   def corpusIndexBands(s: SparkSession, d: String): DataFrame =
@@ -1034,11 +1017,10 @@ object DedupOps {
 
   private val incrementalMinhash: Q = (s, d) => {
     val all = Tables.documents(s, d)
-    val par = s.sparkContext.defaultParallelism
     val corpusSigs = corpusIndexSigs(s, d)
     val corpusBands = corpusIndexBands(s, d)
     val batchSigs = minhashSignatures(
-      all.where(col("source") === IncomingSource).repartition(par)).cutLineage
+      all.where(col("source") === IncomingSource)).cutLineage
     val batchBands = bandBuckets(batchSigs)
     // Batch × corpus candidates: the corpus band table is consumed in
     // its bucket layout — only batch bands move.
@@ -1117,7 +1099,7 @@ object DedupOps {
 
   private def computePhashPairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val hashes = Tables.documentsSpread(s, d)
+    val hashes = Tables.documents(s, d)
       .select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id =>
         MultimodalOps.DocPhash(id, MultimodalOps.PhashCodec.phashOf(id))))
@@ -1133,7 +1115,7 @@ object DedupOps {
     * shuffle — only (doc_id, fingerprint) rows enter the band join. */
   private val audioNearDup: Q = (s, d) => {
     import s.implicits._
-    val hashes = Tables.documentsSpread(s, d)
+    val hashes = Tables.documents(s, d)
       .select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id =>
         MultimodalOps.DocAudioFp(id, MultimodalOps.AudioFpCodec.fpOf(id))))
@@ -1185,7 +1167,7 @@ object DedupOps {
     */
   private val keyframeNearDup: Q = (s, d) => {
     import s.implicits._
-    val hashes = Tables.documentsSpread(s, d)
+    val hashes = Tables.documents(s, d)
       .select(col("doc_id")).as[Long]
       .mapPartitions(MultimodalOps.KeyframeCodec.frameHashesPartition)
       .toDF().cutLineage

@@ -85,7 +85,7 @@ object MultimodalOps {
 
   private val features: Q = (s, d) => {
     import s.implicits._
-    Tables.documentsSpread(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"))
       .as[(Long, Long)]
       .mapPartitions(_.map { case (id, nChars) =>
@@ -325,7 +325,7 @@ object MultimodalOps {
     */
   private val resizePng: Q = (s, d) => {
     import s.implicits._
-    Tables.documentsSpread(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"))
       .as[(Long, Long)]
       .mapPartitions(_.map { case (id, nChars) =>
@@ -342,10 +342,7 @@ object MultimodalOps {
     */
   private val decodePng: Q = (s, d) => {
     import s.implicits._
-    // documentsSpread: the corpus file is ONE input split, and per-row
-    // encode+decode is exactly the map-heavy work that must not
-    // serialize into a single task (same consideration as d2/d3/d4).
-    Tables.documentsSpread(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"))
       .as[(Long, Long)]
       .mapPartitions(_.map { case (id, nChars) =>
@@ -529,7 +526,7 @@ object MultimodalOps {
     * partition-streaming shape. */
   private val decodeWav: Q = (s, d) => {
     import s.implicits._
-    Tables.documentsSpread(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"))
       .as[(Long, Long)]
       .mapPartitions(_.map { case (id, nChars) =>
@@ -567,7 +564,7 @@ object MultimodalOps {
     */
   private val wavFeatures: Q = (s, d) => {
     import s.implicits._
-    Tables.documentsSpread(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"))
       .as[(Long, Long)]
       .mapPartitions(_.flatMap { case (id, nChars) =>
@@ -624,7 +621,7 @@ object MultimodalOps {
     */
   private val silenceSplit: Q = (s, d) => {
     import s.implicits._
-    Tables.documentsSpread(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"))
       .as[(Long, Long)]
       .mapPartitions(_.flatMap { case (id, nChars) =>
@@ -689,7 +686,7 @@ object MultimodalOps {
     */
   private val sceneDetect: Q = (s, d) => {
     import s.implicits._
-    Tables.documentsSpread(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"))
       .as[(Long, Long)]
       .mapPartitions(_.flatMap { case (id, nChars) =>
@@ -1081,12 +1078,11 @@ object MultimodalOps {
   /** Synthesize → encode (real GIF sequence writer) → decode frame-by-
     * frame (real GIF reader) → typed per-frame rows; the one-to-many
     * flatMap shape of [[framesViaCodec]] with a REAL codec in it. Zero
-    * shuffle; documentsSpread for the same single-split reason as
-    * [[decodePng]].
+    * shuffle.
     */
   private val framesGif: Q = (s, d) => {
     import s.implicits._
-    Tables.documentsSpread(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"))
       .as[(Long, Long)]
       .mapPartitions(_.flatMap { case (id, nChars) =>

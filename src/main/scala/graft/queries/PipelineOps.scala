@@ -255,7 +255,7 @@ object PipelineOps {
     md5(concat(lit("pos:"), id.cast("string")))
 
   private val shardShuffle: Q = (s, d) => {
-    val base = Tables.documentsSpread(s, d)
+    val base = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         size(toks(col("text"))).cast("long").as("n_tok"),
         shardNibble(col("doc_id")).as("shard"),
@@ -382,7 +382,7 @@ object PipelineOps {
     // materialized artifact fences filter pushdown from substituting the
     // expressions back into the scan; text is dropped so the
     // materialized frame is a few scalar columns.
-    Tables.documentsSpread(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("text"), t.as("__toks"))
       .select(col("doc_id"), col("lang"), col("text"),
         size(col("__toks")).as("n_tok"),
@@ -522,7 +522,7 @@ object PipelineOps {
         coalesce(col("cleaned_hash"), md5(lit(""))).as("cleaned_hash"))
   }
 
-  private val lineDedup: Q = (s, d) => lineDedupOf(Tables.documentsSpread(s, d))
+  private val lineDedup: Q = (s, d) => lineDedupOf(Tables.documents(s, d))
 
   /** Per-document keyword extraction: the top-3 "most frequent, least
     * common" tokens — ranked by term frequency desc, then corpus
@@ -548,7 +548,7 @@ object PipelineOps {
       .select(col("doc_id"), col("token"), col("tf"), col("df"), col("rank"))
   }
 
-  private val keywords: Q = (s, d) => keywordsOf(Tables.documentsSpread(s, d))
+  private val keywords: Q = (s, d) => keywordsOf(Tables.documents(s, d))
 
   /** Rarity cutoff for [[lmScoreOf]]: a token is rare when its corpus
     * share is under 1/[[RareDenom]]. */
@@ -583,7 +583,7 @@ object PipelineOps {
         col("common_sum").cast("double") / col("n_tokens").cast("double"))
   }
 
-  private val lmScore: Q = (s, d) => lmScoreOf(Tables.documentsSpread(s, d))
+  private val lmScore: Q = (s, d) => lmScoreOf(Tables.documents(s, d))
 
   /** Bigram language-model scoring — the CCNet-class perplexity-proxy
     * quality signal tx_lm_score's unigram commonness approximates: train
@@ -602,7 +602,7 @@ object PipelineOps {
     * counts, both Zipf-bounded vocabulary tables), scoring is one join
     * per table keyed on the gram — only (doc_id, gram) pairs shuffle,
     * text never does. */
-  private val bigramLm: Q = (s, d) => bigramLmOf(Tables.documentsSpread(s, d))
+  private val bigramLm: Q = (s, d) => bigramLmOf(Tables.documents(s, d))
 
   def bigramLmOf(docs: DataFrame): DataFrame = {
     // Docs with <2 tokens have NO bigrams → absent row (not a degenerate
@@ -684,7 +684,7 @@ object PipelineOps {
 
   private[graft] def bm25Compute(s: SparkSession, d: String): DataFrame = {
     import graft.core.Lineage.LineageOps
-    val docs = Tables.documentsSpread(s, d)
+    val docs = Tables.documents(s, d)
     val tokens = docs.select(col("doc_id"), explode(toks(col("text"))).as("w"))
       .where(col("w") =!= "")
     // ONE corpus tokenize pass: a wide per-doc aggregate carries dl plus
@@ -1069,7 +1069,7 @@ object PipelineOps {
       round(fold("tvd_t") * lit(0.5) * lit(1e6)).cast("long").as("tvd_micro"))
   }
 
-  private val driftPsi: Q = (s, d) => driftPsiOf(Tables.documentsSpread(s, d))
+  private val driftPsi: Q = (s, d) => driftPsiOf(Tables.documents(s, d))
 
   /** Gradient-descent rounds, integer learning rate, and the bootstrap
     * label threshold for the in-engine quality-classifier trainer
@@ -1133,7 +1133,7 @@ object PipelineOps {
     graft.core.Materialize.once(s, s"qc_train:$d")(qcTrainRounds(s, d))
 
   private def qcTrainRounds(s: SparkSession, d: String): DataFrame = {
-    val feat = qcFeaturesOf(Tables.documentsSpread(s, d)).cutLineage
+    val feat = qcFeaturesOf(Tables.documents(s, d)).cutLineage
     feat.persist()
     try {
       val n = feat.count()
@@ -1228,7 +1228,7 @@ object PipelineOps {
 
   private val qualityFilter: Q = (s, d) => {
     val (w0, w1, w2) = qcTrainedWeights(s, d)
-    qcServeOf(Tables.documentsSpread(s, d), w0, w1, w2)
+    qcServeOf(Tables.documents(s, d), w0, w1, w2)
   }
 
   /** Default noise seed for [[dpCard]] (override with
@@ -1366,7 +1366,7 @@ object PipelineOps {
     * population, z range, keep share. */
   private val curriculumBuckets: Q = (s, d) => {
     val (w0, w1, w2) = qcTrainedWeights(s, d)
-    val scored = qcServeOf(Tables.documentsSpread(s, d), w0, w1, w2)
+    val scored = qcServeOf(Tables.documents(s, d), w0, w1, w2)
     val ph = ntile(CurriculumPhases)
       .over(Window.orderBy(col("z").desc, col("doc_id")))
     scored.select(col("doc_id"), col("z"), col("keep"), ph.as("phase"))
@@ -1392,7 +1392,7 @@ object PipelineOps {
   def curriculumCuts(s: SparkSession, d: String): (Double, Double, Double) = {
     import graft.functions.KllSketch._
     val (w0, w1, w2) = qcTrainedWeights(s, d)
-    val r = qcServeOf(Tables.documentsSpread(s, d), w0, w1, w2)
+    val r = qcServeOf(Tables.documents(s, d), w0, w1, w2)
       .select(col("z").cast("double").as("zv"))
       .agg(kll_sketch_agg(col("zv"), Relational.KllK).as("sk"))
       .select(kll_quantiles(col("sk"), Seq(0.25, 0.5, 0.75)).as("q"))
@@ -1429,7 +1429,7 @@ object PipelineOps {
     import s.implicits._
     val (w0, w1, w2) = qcTrainedWeights(s, d)
     val (t25, t50, t75) = curriculumCuts(s, d) // pass 1: the sketch
-    val scored = qcServeOf(Tables.documentsSpread(s, d), w0, w1, w2)
+    val scored = qcServeOf(Tables.documents(s, d), w0, w1, w2)
       .select(col("z").cast("double").as("zv"), col("keep"))
     // Pass 2: literal-threshold assignment + every gated aggregate in
     // one scan, grouped to |phases| rows, folded on bounded metadata.
@@ -1496,7 +1496,7 @@ object PipelineOps {
       .agg(count(lit(1)).as("group_n"))
       .withColumn("at_risk", col("group_n") < lit(KAnonK))
 
-  private val kAnonymity: Q = (s, d) => kAnonymityOf(Tables.documentsSpread(s, d))
+  private val kAnonymity: Q = (s, d) => kAnonymityOf(Tables.documents(s, d))
 
   val queries: Map[String, Q] = Map(
     "pipe_drift_psi" -> driftPsi,

@@ -348,6 +348,10 @@ object SuffixOps {
       Iterator.single(RankBlock(srk, srk2, spos, sdoc, ssent))
     }, preservesPartitioning = true)
 
+  /** Floor on the rows per suffix-array chunk: 64 Ki rows ≈ 2.5 MB of
+    * packed longs (see the chunk-count floor in [[suffixDupOf]]). */
+  private val MinChunkRows = 64L * 1024
+
   /** (doc_id, max_dup_tokens, n_dup_pos_ge8) per document. */
   def suffixDupOf(docs0: DataFrame): DataFrame = {
     val spark = docs0.sparkSession
@@ -371,19 +375,15 @@ object SuffixOps {
     // a 32-way fan-out makes every one of the ~14 batched exchanges pure
     // task-scheduling overhead (measured: the 8-core bench ran this query
     // ~3× faster than the 32-core one). Floor the chunk size instead of
-    // tying parts to the core count: parts = clamp(N / minChunkRows, 1,
+    // tying parts to the core count: parts = clamp(N / MinChunkRows, 1,
     // shufflePartitions). At 100 TB the shufflePartitions cap dominates
     // (N / 64k ≫ partitions) and sizing stays the documented
     // "spark.sql.shuffle.partitions puts chunks in the 100 MB–1 GB band"
     // rule; the floor only bites at small N, where fewer, fatter chunks
-    // win (guide §2.2: fewer, larger partitions). Parameterised:
-    // spark.graft.suffix.minChunkRows (default 64 Ki rows ≈ 2.5 MB of
-    // packed longs per chunk).
-    val minChunkRows = spark.conf.getOption("spark.graft.suffix.minChunkRows")
-      .map(_.toLong).filter(_ >= 1L).getOrElse(64L * 1024)
+    // win (guide §2.2: fewer, larger partitions).
     val parts = math.max(1, math.min(
       spark.sessionState.conf.numShufflePartitions,
-      math.max(1L, totalN / minChunkRows).min(Int.MaxValue.toLong).toInt))
+      math.max(1L, totalN / MinChunkRows).min(Int.MaxValue.toLong).toInt))
     val axis = new Axis(totalN, parts)
     val idPart = new IdPart(parts)
 
@@ -759,7 +759,7 @@ object SuffixOps {
         coalesce(col("n_dup_pos_ge8"), lit(0L)).as("n_dup_pos_ge8"))
   }
 
-  private val suffixDup: Q = (s, d) => suffixDupOf(Tables.documentsSpread(s, d))
+  private val suffixDup: Q = (s, d) => suffixDupOf(Tables.documents(s, d))
 
   val queries: Map[String, Q] = Map(
     "d21_suffix_dup" -> suffixDup,

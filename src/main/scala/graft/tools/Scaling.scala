@@ -39,7 +39,7 @@ object Scaling {
     val times = scala.collection.mutable.LinkedHashMap
       .empty[(String, String), Double]
     for (sf <- sfs) {
-      try graft.Tables.events(spark, sf).count()
+      try graft.Tables.prepare(spark, sf)
       catch { case _: Throwable => () }
       for (n <- names) {
         graft.core.Materialize.clear(spark)

@@ -173,15 +173,17 @@ class MultimodalParitySpec extends AnyFunSuite {
       "the codec-free byte-window query must not pay typed-object serialization")
   }
 
-  test("mm_features: the codec pipeline's only exchange is the deliberate " +
-       "input spread (decode itself is partition-streaming)") {
+  test("mm_features: the codec pipeline plans no exchange and decodes " +
+       "from a scan of at least 2 splits (decode is partition-streaming)") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val plan = SparkEntry.queries("mm_features")(spark, sf)
-      .queryExecution.executedPlan.toString
-    // documentsSpread round-robins the single corpus split across tasks
-    // BEFORE the map-heavy decode — that one exchange is the point; the
-    // decode and feature extraction add none (no join, no aggregation).
-    assert(plan.split("Exchange").length - 1 == 1, plan.take(800))
-    assert(plan.contains("RoundRobinPartitioning"), plan.take(800))
+      .queryExecution.executedPlan
+    // The connector layer hands the corpus over already spread, so the
+    // decode and feature extraction run in the scan's own tasks.
+    assert(!plan.toString.contains("Exchange"), plan.toString.take(800))
+    val splits = plan.collect { case scan: FileSourceScanExec =>
+      scan.inputRDDs().head.getNumPartitions }
+    assert(splits.nonEmpty && splits.forall(_ >= 2), s"$splits\n${plan.toString.take(800)}")
   }
 
   test("mm_frames_gif: real multi-frame GIF round-trip, every geometry " +
